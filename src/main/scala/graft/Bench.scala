@@ -69,7 +69,7 @@ object Bench {
     "d174_ivf_drift", "d175_parquet_pageidx", "d176_stream_dedup",
     "d177_stream_pack")
 
-  /** Fixed CPU-bound calibration microbench ("DotBench"): scalar dot
+  /** Fixed CPU-bound calibration microbench: scalar dot
     * products over pinned-size float arrays with deterministic
     * contents — a constant FLOP count, no Spark, no I/O, single
     * thread. Its wall time measures THIS HOST at THIS MOMENT, so
@@ -439,13 +439,14 @@ object Bench {
     // 148-query map is ~4 KB and can never fit that window, so the
     // per-query map rides the final line ONLY when the whole line fits
     // a conservative tail budget (env-overridable if the driver's
-    // window is ever raised); otherwise the compact line stays last —
-    // an unparseable artifact loses the total too, which is strictly
-    // worse than a blind-per-query one. Additions-only either way: the
-    // compact form keeps every existing key and gains queries_sha, the
-    // fingerprint binding it to BENCH_LAST.json's map.
+    // window is ever raised) — then the full line above is already
+    // last; otherwise the compact line follows it — an unparseable
+    // artifact loses the total too, which is strictly worse than a
+    // blind-per-query one. Additions-only either way: the compact form
+    // keeps every existing key and gains queries_sha, the fingerprint
+    // binding it to BENCH_LAST.json's map.
     val tailBudget = sys.env.getOrElse("SPARK_GRAFT_TAIL_BUDGET", "1800").toInt
-    println(if (fullLine.length <= tailBudget) fullLine else compactLine)
+    if (fullLine.length > tailBudget) println(compactLine)
     spark.stop()
   }
 }

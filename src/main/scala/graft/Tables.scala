@@ -18,8 +18,7 @@ object Tables {
            spread: Boolean = false): DataFrame = {
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     val df =
-      if (spread && sys.env.getOrElse("SPARK_GRAFT_SPREAD", "1") == "1")
-        raw.repartition(spark.sparkContext.defaultParallelism)
+      if (spread) raw.repartition(spark.sparkContext.defaultParallelism)
       else raw
     // events.ts has shipped as both parquet TIMESTAMP(NANOS) (scans as
     // a long under nanosAsLong — truncate to micros, exactly what

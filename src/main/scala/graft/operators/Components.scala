@@ -34,8 +34,8 @@ object Components {
     * latency; (2) checkpointed rounds keep their origin plan's
     * Catalyst size estimate, and because joins MULTIPLY child sizes
     * the estimate's bit-length doubles per round — by round ~12 the
-    * optimizer burned minutes multiplying million-bit BigInts
-    * (tools/StatsProbe); (3) the convergence test was a second job per
+    * optimizer burned minutes multiplying million-bit BigInts; (3)
+    * the convergence test was a second job per
     * round. The RDD loop fixes all three: one HashPartitioner is
     * reused for adjacency and labels so the neighbor join and the
     * final merge are NARROW (2 shuffles/round: the contribution
@@ -250,9 +250,6 @@ object Components {
         }
       }
       converged = changedAcc.value == 0L
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $i changed=${changedAcc.value} " +
-          s"nPart=${part.numPartitions}")
       i += 1
     }
     // degenerate inputs converge trivially: maxIter = 0 (or a vertex

@@ -31,9 +31,13 @@ object Dedup {
     * aggregate, once by id for the join). This form scans ONCE and
     * ships one narrow (hash, id, payload) partial-aggregate exchange.
     * `keep` names payload columns of `docs` that ride with the keeper;
-    * output columns: keeper_id, keep… */
+    * output columns: keeper_id, keep… — a `keep` name that collides
+    * with keeper_id or the internal _kid is rejected. */
   def exactKeeperRows(docs: DataFrame, text: Column, id: Column,
                       keep: Seq[String]): DataFrame = {
+    val clash = keep.filter(k => Seq("keeper_id", "_kid").exists(_.equalsIgnoreCase(k)))
+    require(clash.isEmpty, s"exactKeeperRows: keep column(s) ${clash.mkString(", ")} " +
+      "collide with the operator's own keeper_id/_kid")
     val row = struct((id.as("_kid") +: keep.map(col)): _*)
     docs.groupBy(md5(text).as("content_hash"))
       .agg(min(row).as("_r"))
@@ -236,33 +240,6 @@ object Dedup {
     val banded = docs.filter(size(TextOps.tokens(text)) >= 3)
       .select(id.as("doc_id"),
         posexplode(polyRowBands(text, bands, rows))
-          .as(Seq("band_idx", "band_hash")))
-    pairsInBuckets(banded, Seq("band_idx", "band_hash"), col("doc_id"), maxBucket)
-  }
-
-  /** The RETIRED aggregated-signature candidate path (pre-r16), kept
-    * private[graft] ONLY as the measured baseline for the fused
-    * per-row band swap (ScaleRehearsal "r17ab"; OperatorsSpec pins the
-    * candidate sets equal via its own inline reconstruction): shingle
-    * explode → per-doc numPerms-min hash aggregate → base-131 band
-    * combine → the same [[pairsInBuckets]]. The explode ships one
-    * (doc_id, h) row PER SHINGLE into the aggregate — a corpus-token-
-    * sized exchange the fused path never pays. Do not use in a gate. */
-  private[graft] def polyMinhashPairsAggPath(docs: DataFrame, text: Column,
-                                             id: Column, bands: Int = 4,
-                                             rows: Int = 4,
-                                             maxBucket: Int = Int.MaxValue): DataFrame = {
-    val exploded = docs.filter(size(TextOps.tokens(text)) >= 3)
-      .select(id.as("doc_id"), explode(polyShingleHashes(text)).as("h"))
-    val mins = polyCoefs.take(bands * rows).zipWithIndex.map {
-      case ((a, b), i) => min(pmod(col("h") * a + b, lit(P))).as(s"m$i") }
-    val sigs = exploded.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-    val bandCols = (0 until bands).map { bi =>
-      (bi * rows until (bi + 1) * rows).map(i => col(s"m$i"))
-        .reduceLeft((acc, m) => pmod(acc * 131L + m, lit(P))).as(s"b$bi") }
-    val banded = sigs.select(col("doc_id") +: bandCols: _*)
-      .select(col("doc_id"),
-        posexplode(array((0 until bands).map(i => col(s"b$i")): _*))
           .as(Seq("band_idx", "band_hash")))
     pairsInBuckets(banded, Seq("band_idx", "band_hash"), col("doc_id"), maxBucket)
   }

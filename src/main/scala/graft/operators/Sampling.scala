@@ -219,6 +219,10 @@ object Sampling {
                   carry: Seq[String] = Nil): DataFrame = {
     require(factorsMicro.values.forall(_ >= 0L),
       "epoch factors must be non-negative micro-units")
+    val clash = carry.filter(c =>
+      Seq("doc_id", "domain", "epoch", "_n").exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"epochRepeat: carry column(s) ${clash.mkString(", ")} " +
+      "collide with the operator's own doc_id/domain/epoch/_n")
     val f = factorsMicro.foldLeft(lit(0L)) { case (acc, (d, m)) =>
       when(domain === d, lit(m)).otherwise(acc) }
     val copies = graft.functions.IntMath.intDiv(f, lit(BUCKETS)) +

@@ -83,15 +83,22 @@ object Web {
     * payload next to the verdict selects it HERE instead of semi-joining
     * the corpus back on doc_id — the select is row-wise 1:1, so carrying
     * is free while the re-attach join costs a second corpus scan and a
-    * corpus-wide exchange at any scale. */
+    * corpus-wide exchange at any scale. A carried column named like one
+    * of the verdict columns is rejected. */
   def curateUrls(docs: DataFrame, url: Column, id: Column,
                  blockedDomains: Seq[String],
-                 carry: Seq[Column] = Nil): DataFrame =
-    docs.select(Seq(id.as("doc_id"),
+                 carry: Seq[Column] = Nil): DataFrame = {
+    val out = docs.select(Seq(id.as("doc_id"),
       canonicalUrl(url).as("canon_url"),
       registeredDomain(url).as("domain"),
       (!registeredDomain(url).isin(blockedDomains: _*)).as("kept")) ++
       carry: _*)
+    val (own, carried) = out.columns.toSeq.splitAt(4)
+    val clash = carried.filter(c => own.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"curateUrls: carry column(s) ${clash.mkString(", ")} " +
+      s"collide with the operator's own ${own.mkString("/")}")
+    out
+  }
 
   /** Blocklist filter against a TABLE of blocked domains (opt-out
     * lists run to millions of rows): broadcast LEFT ANTI join on the

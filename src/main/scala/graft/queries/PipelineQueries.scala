@@ -20,11 +20,6 @@ object PipelineQueries {
     * be reused while its table is registered. */
   private val streamGateN = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The file-stream source only accepts a DIRECTORY to list; the
-    * driver test tables are single parquet files. Stage a per-(dir,
-    * table) temp directory holding one symlink to the real file —
-    * zero data copied, and the streaming scan reads the genuine
-    * driver bytes. Cached: Bench reps re-enter the same key. */
   /** d155's trained IVF cell state, once per sf dir (KB of driver
     * state — the d66 postings-index mechanics applied to centroids). */
   private val ivfCentroidCache =
@@ -74,73 +69,68 @@ object PipelineQueries {
         .deleteQuietly(new java.io.File(d)))))
   private def trackTemp(p: String): String = { tempDirHook; tempDirs.add(p); p }
 
-  /** Stateful stream-gate shuffle sizing (optimization guide §2.2/§2.5):
-    * a stateful micro-batch runs `spark.sql.shuffle.partitions` state
-    * store tasks PER STORE PER BATCH regardless of data volume (AQE is
-    * disabled on streams, so nothing coalesces them), and the
-    * stream-stream join keeps FOUR stores per partition. At the
-    * session default (= core count) the wave gates paid 32 store
-    * open/commit cycles per store per batch to shuffle a few hundred
-    * KB — pure fixed cost that also does not shrink when the driver
-    * re-benches at a lower core count. Derive the partition count from
-    * the staged input size instead (~32 MB of input per state task,
-    * capped at the session parallelism), overridable for a real
-    * deployment via SPARK_GRAFT_STREAM_SHUFFLE — at 100 TB/day the
-    * right number is throughput- and key-cardinality-sized, never the
-    * local core count. Results are partitioning-invariant: watermarks
-    * are global per batch and state is keyed, so only task counts
-    * change (oracle-replayed both SFs after the change). */
-  private def withStreamShuffle[T](s: SparkSession, inputBytes: Long)(body: => T): T = {
-    // NOTE: mutates the SHARED session conf around the gate body — fine
-    // under the sequential gate harness (Verify/Bench/QueryTimer run one
-    // gate at a time); if gates ever run concurrently on one session,
-    // scope the override via s.newSession instead (the set/restore
-    // would race and leak into unrelated queries).
-    // State-store provider is env-selectable (r17, VERDICT item 4's
-    // measure-don't-reason): SPARK_GRAFT_STREAM_STATESTORE=rocksdb swaps
-    // the HDFS-backed in-memory provider for RocksDB. Measured on the
-    // wave gates (d170/d176): RocksDB is a consistent loss at gate state
-    // sizes (KBs of keyed state — the JNI + disk round trip buys nothing
-    // when the whole store fits in a few pages), so the default stays
-    // HDFS-backed; a deployment whose per-partition state outgrows the
-    // executor heap flips the env. Numbers in OPTIMIZATION_r17.md.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val provider = sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case "hdfs" =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_STATESTORE must be rocksdb|hdfs, got '$other'")
-    }
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val target = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map { v =>
-      val n = try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be an int >= 1, got '$v'")
-      }
-      require(n >= 1, s"SPARK_GRAFT_STREAM_SHUFFLE must be >= 1, got $n")
-      n
-    }.getOrElse {
+  /** Runs one stream gate to completion: the stream `build` returns
+    * drains into a uniquely-named memory sink under
+    * Trigger.AvailableNow, `rollup` reduces the sink table to the
+    * gate's result, and that result comes back as a LOCAL DataFrame
+    * on `s` with the sink dropped — without the drop every bench rep
+    * and verify pass would leave its sink buffer pinned in driver
+    * memory for the session (r14 ADVICE). The rollups are small
+    * (per-doc / per-window rows), so the collect is bounded; callers
+    * re-apply their ORDER BY on the returned frame.
+    *
+    * Stateful gates pass their `staged` wave dirs. A stateful
+    * micro-batch runs `spark.sql.shuffle.partitions` state-store tasks
+    * PER STORE PER BATCH regardless of data volume (AQE is disabled on
+    * streams, and the stream-stream join keeps FOUR stores per
+    * partition), so at the session default (= core count) the wave
+    * gates paid 32 store open/commit cycles per store per batch to
+    * shuffle a few hundred KB. The width is derived from the staged
+    * input instead (~32 MB per state task, capped at the session
+    * parallelism) and applied on a child session (`s.newSession()`
+    * carrying `s`'s SQL conf), so the shared session's conf is never
+    * touched. Results are partitioning-invariant: watermarks are
+    * global per batch and state is keyed, so only task counts change.
+    * Stateless gates (no `staged`) run on `s` itself. */
+  private def runStreamGate(s: SparkSession, gate: String,
+                            staged: Seq[String] = Nil)(
+      build: SparkSession => DataFrame)(
+      rollup: DataFrame => DataFrame): DataFrame = {
+    val scoped = if (staged.isEmpty) s else {
       val perTask = 32L << 20
-      math.min(s.sparkContext.defaultParallelism.toLong,
-        math.max(1L, (inputBytes + perTask - 1) / perTask)).toInt
+      val width = math.min(s.sparkContext.defaultParallelism.toLong,
+        math.max(1L, (stagedBytes(staged) + perTask - 1) / perTask))
+      val child = s.newSession()
+      s.conf.getAll.foreach { case (k, v) =>
+        if (child.conf.isModifiable(k)) child.conf.set(k, v) }
+      child.conf.set("spark.sql.shuffle.partitions", width.toString)
+      child
     }
-    s.conf.set(key, target.toString)
-    provider.foreach(s.conf.set(provKey, _))
-    try body finally {
-      s.conf.set(key, prev)
-      if (provider.isDefined) s.conf.set(provKey, prevProv)
-    }
+    val sink = s"${gate}_out_" + streamGateN.incrementAndGet()
+    build(scoped).writeStream.outputMode("append").format("memory")
+      .queryName(sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val out = rollup(scoped.table(sink))
+    val rows = out.collect()
+    scoped.catalog.dropTempView(sink)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
+
+  /** The documents table as a file stream (one micro-batch). */
+  private def docStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(s"$dir/documents.parquet").schema)
+      .parquet(streamDir(dir, "documents"))
+
+  /** A staged wave dir as a file stream, one wave per micro-batch
+    * (the files' strictly increasing mtimes order them). */
+  private def waveStream(s: SparkSession, ddl: String, path: String): DataFrame =
+    s.readStream.schema(ddl).option("maxFilesPerTrigger", "1").parquet(path)
 
   /** Total bytes under the staged stream dirs (symlinks followed,
     * subdirectories walked; an unreadable dir contributes 0 rather
     * than NPE-ing the gate — the shuffle width just floors at 1). */
-  private def stagedBytes(paths: String*): Long = {
+  private def stagedBytes(paths: Seq[String]): Long = {
     def sizeOf(f: java.io.File): Long =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).map(sizeOf).sum
@@ -148,6 +138,11 @@ object PipelineQueries {
     paths.map(p => sizeOf(new java.io.File(p))).sum
   }
 
+  /** The file-stream source only accepts a DIRECTORY to list; the
+    * driver test tables are single parquet files. Stage a per-(dir,
+    * table) temp directory holding one symlink to the real file —
+    * zero data copied, and the streaming scan reads the genuine
+    * driver bytes. Cached: Bench reps re-enter the same key. */
   private val streamDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def streamDir(dir: String, table: String): String =
     streamDirCache.computeIfAbsent(s"$dir/$table", _ => {
@@ -157,22 +152,6 @@ object PipelineQueries {
         java.nio.file.Paths.get(dir, s"$table.parquet"))
       trackTemp(d.toString)
     })
-
-  /** Drains a finished streaming gate's memory-sink rollup into a
-    * LOCAL DataFrame and DROPS the sink table: each gate execution
-    * registers a uniquely-named memory sink (names can't be reused
-    * while registered), and without the drop every bench rep and
-    * verify pass leaves its full sink buffer pinned in driver memory
-    * for the session (r14 ADVICE). The rollups are small (per-doc /
-    * per-window rows), so the collect is bounded; callers re-apply
-    * their ORDER BY on the returned frame. */
-  private def drainSink(s: SparkSession, sink: String,
-                        out: DataFrame): DataFrame = {
-    val rows = out.collect()
-    val schema = out.schema
-    s.catalog.dropTempView(sink)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
 
   /** d165's deterministic OUT-OF-ORDER event file set, staged once
     * per sf dir: the events table splits into three waves by
@@ -191,29 +170,18 @@ object PipelineQueries {
     windowStreamCache.computeIfAbsent(dir, _ => {
       val base = java.nio.file.Files.createTempDirectory("graft_stream_win")
       val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"),
+        .select(pmod(col("event_id"), lit(3)).as("wave"), col("event_id"),
           (date_trunc("minute", col("ts")) + expr("INTERVAL 1 SECOND")).as("ts"),
           col("event_type"), col("value"))
-      (0 until 3).foreach { w =>
-        val tmp = base.resolve(s"_w$w").toString
-        ev.filter(pmod(col("event_id"), lit(3)) === w).coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = base.resolve(s"wave$w.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        dst.toFile.setLastModified(1700000000000L + w * 60000L)
-      }
+      stageWaves(ev, base, 3)
       trackTemp(base.toString)
     })
 
-  /** Generic wave stager (the d165 mechanics, reused by d169/d170):
-    * writes `df` split by `waveOf` into single-file parquets with
+  /** Generic wave stager (d165/d169/d170/d176/d177): writes `df`
+    * split by its `wave` column into single-file parquets with
     * strictly increasing mtimes, so the file-stream source +
     * maxFilesPerTrigger=1 replays each wave as its own micro-batch. */
-  private def stageWaves(df: DataFrame, base: java.nio.file.Path,
+  private[graft] def stageWaves(df: DataFrame, base: java.nio.file.Path,
                          nWaves: Int): Unit =
     (0 until nWaves).foreach { w =>
       val tmp = base.resolve(s"_w$w").toString
@@ -977,30 +945,11 @@ object PipelineQueries {
         .select((col("doc_id") + 5000000L).as("bench_id"),
           concat_ws(" ", slice(toks, lit(1),
             greatest(size(toks) - 1, lit(1)))).as("snippet"))
-      val path = streamDir(dir, "documents")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$dir/documents.parquet").schema)
-        .parquet(path).select(col("doc_id"), col("text"))
-      val sink = "d154_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.decontaminate(stream, bench,
-          col("text"), col("doc_id"), col("snippet"), col("bench_id"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink)
-        .groupBy("doc_id")
+      runStreamGate(s, "d154") { ss =>
+        graft.streaming.EventStream.decontaminate(
+          docStream(ss, dir).select(col("doc_id"), col("text")),
+          bench, col("text"), col("doc_id"), col("snippet"), col("bench_id"))
+      }(_.groupBy("doc_id")
         .agg(countDistinct(col("bench_id")).as("n_bench_hits"),
           min(col("bench_id")).as("first_bench_id")))
         .orderBy("doc_id")
@@ -1017,29 +966,12 @@ object PipelineQueries {
       val d = docs(s, dir).select(col("doc_id"), col("lang"), col("text"))
       val th = TextOps.qualityThresholds(d, col("text"), col("lang"),
         keepFrac = 0.5)
-      val path = streamDir(dir, "documents")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$dir/documents.parquet").schema)
-        .parquet(path).select(col("doc_id"), col("lang"), col("text"))
-      val sink = "d156_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.qualityFiltered(stream,
+      runStreamGate(s, "d156") { ss =>
+        graft.streaming.EventStream.qualityFiltered(
+          docStream(ss, dir).select(col("doc_id"), col("lang"), col("text")),
           col("text"), col("lang"), col("doc_id"), th)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink)).orderBy("doc_id")
+      }(identity)
+        .orderBy("doc_id")
     }),
 
     // near-dup-at-ingest as an oracle gate (the d02 family's §2.6
@@ -1050,30 +982,11 @@ object PipelineQueries {
     // per doc, self-pairs excluded).
     "d157_stream_neardup" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val path = streamDir(dir, "documents")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$dir/documents.parquet").schema)
-        .parquet(path).select(col("doc_id"), col("text"))
-      val sink = "d157_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.nearDupAgainst(stream, corpus,
-          col("text"), col("doc_id"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink)
-        .groupBy("doc_id")
+      runStreamGate(s, "d157") { ss =>
+        graft.streaming.EventStream.nearDupAgainst(
+          docStream(ss, dir).select(col("doc_id"), col("text")),
+          corpus, col("text"), col("doc_id"))
+      }(_.groupBy("doc_id")
         .agg(countDistinct(col("corpus_doc_id")).as("n_corpus_hits"),
           min(col("corpus_doc_id")).as("first_corpus_id")))
         .orderBy("doc_id")
@@ -1094,29 +1007,12 @@ object PipelineQueries {
       val (bg, w1, dflt) = lmModelCache.computeIfAbsent(dir,
         _ => TextOps.bigramLmModel(d.filter(col("lang") === "en"),
           col("text")))
-      val path = streamDir(dir, "documents")
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$dir/documents.parquet").schema)
-        .parquet(path).select(col("doc_id"), col("text"))
-      val sink = "d158_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.lmScored(stream,
+      runStreamGate(s, "d158") { ss =>
+        graft.streaming.EventStream.lmScored(
+          docStream(ss, dir).select(col("doc_id"), col("text")),
           col("text"), col("doc_id"), bg, w1, dflt)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink)).orderBy("doc_id")
+      }(identity)
+        .orderBy("doc_id")
     }),
 
     // the watermark/window SEMANTICS gate (q13's streaming twin under
@@ -1130,49 +1026,22 @@ object PipelineQueries {
     // both pinned by the hash.
     "d165_stream_window" -> ((s, dir) => {
       val path = windowStreamDir(s, dir)
-      withStreamShuffle(s, stagedBytes(path)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      val sink = "d165_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.windowedCounts(stream)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink).select(
+      runStreamGate(s, "d165", Seq(path)) { ss =>
+        graft.streaming.EventStream.windowedCounts(waveStream(ss,
+          "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE", path))
+      }(_.select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm").as("window_start"),
           col("event_type"), col("n"),
           rd(col("total_value"), 2).as("total_value")))
         .orderBy("window_start", "event_type")
-      }
     }),
 
     // q12's streaming twin under genuine out-of-order arrival: gap
     // sessions via flatMapGroupsWithState + EVENT-TIME TIMEOUT. Three
     // waves (event_id % 3) arrive as separate micro-batches; the
-    // oracle replays the MEASURED protocol closed-form
-    // (tools/StreamProbe3): late rows in batch b are dropped against
-    // the watermark from batch b-2's stats, inline closes follow the
+    // oracle replays the MEASURED protocol closed-form (StreamingSpec's
+    // staged-wave and sessionize cases): late rows in batch b are
+    // dropped against the watermark from batch b-2's stats, inline closes follow the
     // q12 gap rule over (arrival-batch, ts) processing order, and the
     // trailing no-data batches fire the remaining timeouts up to
     // wmf = max(ts) - horizon — a final session whose lastTs + gap
@@ -1180,44 +1049,20 @@ object PipelineQueries {
     // horizon 1801 s make every comparison equality-free.
     "d169_stream_sessions" -> ((s, dir) => {
       val path = sessionStreamDir(s, dir)
-      withStreamShuffle(s, stagedBytes(path)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      val sink = "d169_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.sessionize(s, stream,
+      runStreamGate(s, "d169", Seq(path)) { ss =>
+        graft.streaming.EventStream.sessionize(ss,
+          waveStream(ss, "user_id LONG, ts TIMESTAMP, value DOUBLE", path),
           gapSeconds = 1807, horizon = "1801 seconds")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink).select(
+      }(_.select(
           col("user_id"), col("session_start"), col("n_events"),
           rd(col("session_value"), 2).as("session_value")))
         .orderBy("user_id", "session_start")
-      }
     }),
 
     // d01's streaming twin as an ORACLE gate (the §2.6 promotion for
     // dropDuplicatesWithinWatermark): true duplicates spread across
-    // out-of-order waves. The MEASURED protocol (tools/StreamProbe4):
+    // out-of-order waves. The MEASURED protocol (StreamingSpec's
+    // staged-wave dedup case):
     // state visibility AND the late filter both use the batch b-2
     // stats watermark (a key whose expiry passed re-EMITS once the
     // lagged watermark crosses it — dedup-within-horizon, exactly as
@@ -1227,42 +1072,15 @@ object PipelineQueries {
     // The oracle replays emissions closed-form per duplicate group.
     "d176_stream_dedup" -> ((s, dir) => {
       val path = dedupStreamDir(s, dir)
-      withStreamShuffle(s, stagedBytes(path)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      val sink = "d176_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.deduplicated(stream,
-          col("text"), horizon = "1801 seconds")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
       // doc_id projected AWAY: which twin the engine keeps within a
       // batch is engine order; the (hash, ts) emission set is the
       // deterministic contract
-      drainSink(s, sink, s.table(sink).select(
-          col("content_hash"),
-          unix_timestamp(col("ts")).as("ts_s")))
+      runStreamGate(s, "d176", Seq(path)) { ss =>
+        graft.streaming.EventStream.deduplicated(
+          waveStream(ss, "doc_id LONG, ts TIMESTAMP, text STRING", path),
+          col("text"), horizon = "1801 seconds")
+      }(_.select(col("content_hash"), unix_timestamp(col("ts")).as("ts_s")))
         .orderBy("content_hash", "ts_s")
-      }
     }),
 
     // d19's streaming twin as an ORACLE gate: token-budget pack
@@ -1275,38 +1093,12 @@ object PipelineQueries {
     // wave boundaries whenever the budget cut lands mid-batch.
     "d177_stream_pack" -> ((s, dir) => {
       val path = packStreamDir(s, dir)
-      withStreamShuffle(s, stagedBytes(path)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("stream_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_tokens",
-          org.apache.spark.sql.types.LongType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      val sink = "d177_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.packBudgetStreaming(s, stream,
+      runStreamGate(s, "d177", Seq(path)) { ss =>
+        graft.streaming.EventStream.packBudgetStreaming(ss,
+          waveStream(ss, "stream_id LONG, doc_id LONG, n_tokens LONG", path),
           budget = 1000L)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink).select(
-          col("stream_id"), col("doc_id"), col("n_tokens"), col("pack_id")))
+      }(_.select(col("stream_id"), col("doc_id"), col("n_tokens"), col("pack_id")))
         .orderBy("stream_id", "doc_id")
-      }
     }),
 
     // Stream-stream interval join (click↔impression correlate): both
@@ -1319,44 +1111,17 @@ object PipelineQueries {
     // sides' columns). Tolerance 307 s keeps band edges equality-free.
     "d170_stream_correlate" -> ((s, dir) => {
       val (lpath, rpath) = corrStreamDirs(s, dir)
-      withStreamShuffle(s, stagedBytes(lpath, rpath)) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val ls = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(lpath)
-      val rs = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(rpath)
-      val sink = "d170_out_" + streamGateN.incrementAndGet()
-      val q = graft.streaming.EventStream.correlate(ls, rs,
-          toleranceS = 307, horizon = "1801 seconds")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // dev probe (plan evidence for the committed plans/ dumps): the
-      // last executed micro-batch's physical plan, incl. the state
-      // store partitioning, plus per-batch progress timings. No-op
-      // unless explicitly requested.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) {
-        q.explain()
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-progress] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-      }
-      drainSink(s, sink, s.table(sink).select(
+      val ddl = "user_id LONG, ts TIMESTAMP, value DOUBLE"
+      runStreamGate(s, "d170", Seq(lpath, rpath)) { ss =>
+        graft.streaming.EventStream.correlate(waveStream(ss, ddl, lpath),
+          waveStream(ss, ddl, rpath), toleranceS = 307, horizon = "1801 seconds")
+      }(_.select(
           col("user_id"),
           date_format(col("l_ts"), "yyyy-MM-dd HH:mm:ss").as("l_ts"),
           date_format(col("r_ts"), "yyyy-MM-dd HH:mm:ss").as("r_ts"),
           rd(col("l_value"), 2).as("l_value"),
           rd(col("r_value"), 2).as("r_value")))
         .orderBy("user_id", "l_ts", "r_ts", "l_value", "r_value")
-      }
     }),
 
     // DSIR importance weighting: target seed = the English slice,
@@ -3601,7 +3366,8 @@ object PipelineQueries {
          | GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin.replaceAll("\n", " "),
     // d165: the watermark protocol replayed closed-form — wave by
     // event_id % 3, one micro-batch per wave. MEASURED Spark 4.1.2
-    // semantics (tools/StreamProbe2, strictly-increasing wave maxima):
+    // semantics (StreamingSpec's staged-wave window case,
+    // strictly-increasing wave maxima):
     // the LATE filter in batch b uses the watermark from batch b-2's
     // stats (the watermark computed from batch b-1 is reported for
     // batch b but only filters in batch b+1), while EMISSION at batch
@@ -3625,7 +3391,7 @@ object PipelineQueries {
         | FROM kept, wm WHERE wend <= wmf
         | GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replaceAll("\n", " "),
     // closed-form replay of the MEASURED flatMapGroupsWithState
-    // protocol (StreamProbe3): batch-b late filter uses batch b-2's
+    // protocol (StreamingSpec's sessionize cases): batch-b late filter uses batch b-2's
     // stats (only wave 2 is filtered, against wave 0's max); inline
     // session breaks follow the q12 gap rule over (wave, ts)
     // processing order — a negative inter-wave gap MERGES (the state

@@ -1,6 +1,6 @@
 package graft.slurm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,10 +57,13 @@ object SacctSource {
     * (slurm2sql.py:854-866): spawn sacct on the DRIVER (sacct talks
     * to slurmdbd from a login node — there is nothing distributed
     * about the fetch), stream its stdout to a spill file, and hand
-    * that to [[readReassembled]] so the line-continuation semantics
-    * and the distributed parse are the SAME code path a dump ingest
-    * takes. Returns Left on spawn failure or a non-zero exit (the
-    * reference surfaces these as batch errors, slurm2sql.py:845-850).
+    * that to [[readReassembled]] for the reference's line-continuation
+    * semantics and a distributed parse. A `--sacct-input` dump does
+    * NOT take that path: it goes through [[readSacct]] →
+    * [[readDelimited]], which quarantines a multi-line JobName record
+    * instead of gluing it. Returns Left on spawn failure or a non-zero
+    * exit (the reference surfaces these as batch errors,
+    * slurm2sql.py:845-850).
     * `bin` overrides the executable — the test seam; the reference's
     * own tests stub the subprocess the same way
     * (tests/ run against canned sacct output, never a live daemon). */
@@ -92,7 +95,7 @@ object SacctSource {
   }
 
   /** Live fetch → typed slurm table (spawn + reassembled parse +
-    * [[SlurmTable.build]]). An output with no rows at all (not even a
+    * [[SlurmTable.build]] with `now` as a still-running job's Time). An output with no rows at all (not even a
     * header) maps to Left rather than a reader crash.
     *
     * `spillDir`: where the spawned stdout lands for the distributed
@@ -107,7 +110,8 @@ object SacctSource {
     * materializes ([[deleteSpillDir]]). */
   def liveSlurmTable(spark: SparkSession, filter: Seq[String],
                      bin: String = "sacct",
-                     spillDir: Option[String] = None): Either[String, DataFrame] =
+                     spillDir: Option[String] = None,
+                     now: Column = lit(0L)): Either[String, DataFrame] =
     spawnSacct(bin, filter).flatMap { p =>
       val hasHeader = java.nio.file.Files.size(p) > 0
       if (!hasHeader) {
@@ -126,7 +130,7 @@ object SacctSource {
               new org.apache.hadoop.fs.Path(p.toUri), dst)
             dst.toString
         }
-        Right(SlurmTable.build(readReassembled(spark, readPath)))
+        Right(SlurmTable.build(readReassembled(spark, readPath), now))
       }
     }
 
@@ -212,8 +216,11 @@ object SacctSource {
   /** Full pipeline: raw sacct/CSV file → typed slurm table. A comma
     * separator means real CSV (excel quoting, the reference's
     * csv_input path); any other separator is a raw sacct dump where
-    * quoting never happens. */
-  def loadSlurmTable(spark: SparkSession, path: String, sep: String = ","): DataFrame =
+    * quoting never happens. `now` is the Time a still-running job gets
+    * ([[SlurmTable.build]]). */
+  def loadSlurmTable(spark: SparkSession, path: String, sep: String = ",",
+                     now: Column = lit(0L)): DataFrame =
     SlurmTable.build(
-      if (sep == ",") readCsv(spark, path) else readDelimited(spark, path, sep))
+      if (sep == ",") readCsv(spark, path) else readDelimited(spark, path, sep),
+      now)
 }

@@ -389,7 +389,8 @@ object EventStream {
     * shrank. The timeout fires only in a batch where the group has NO
     * data (Spark calls the function with the new data otherwise), and
     * the firing watermark carries the measured one-batch stats lag
-    * (tools/StreamProbe3 pins the protocol the d169 oracle replays).
+    * (StreamingSpec's sessionize cases pin the protocol the d169
+    * oracle replays).
     * State: one SessionState per live user; the timeout is what
     * bounds the live set on a real stream. */
   def sessionize(spark: SparkSession, events: DataFrame,

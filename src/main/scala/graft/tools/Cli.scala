@@ -93,13 +93,7 @@ object Cli {
     * `--flag=value`; short flags; one optional positional JobID. */
   def parse(argv: Seq[String]): Either[String, Args] = {
     var a = Args()
-    var stateFlag: Option[String] = None
-    def setStates(flag: String, codes: Seq[String]): Either[String, Unit] =
-      stateFlag match {
-        case Some(prev) => Left(s"$flag: not allowed with $prev " +
-          "(state selectors are mutually exclusive)")
-        case None => stateFlag = Some(flag); a = a.copy(states = Some(codes)); Right(())
-      }
+    val sel = new Selectors
     val it = argv.iterator.buffered
     def value(flag: String, inline: Option[String]): Either[String, String] =
       inline match {
@@ -127,56 +121,80 @@ object Cli {
         case "--order" => value(flag, inline).map(v => a = a.copy(order = Some(v)))
         case "--user" | "-u" => value(flag, inline).map(v => a = a.copy(user = Some(v)))
         case "--partition" | "-r" => value(flag, inline).map(v => a = a.copy(partition = Some(v)))
-        case "--ended" | "-e" => setStates(flag, SlurmStates.ENDED)
-        case "--completed" => setStates(flag, SlurmStates.COMPLETED)
-        case "--cancelled" => setStates(flag, SlurmStates.CANCELLED)
-        case "--failed" => setStates(flag, SlurmStates.FAILED)
-        case "--running-at-time" => value(flag, inline).flatMap { v =>
-          stateFlag match {
-            case Some(prev) => Left(s"--running-at-time: not allowed with $prev")
-            case None =>
-              stateFlag = Some(flag)
-              parseTime(v).map(t => a = a.copy(runningAtTime = Some(t)))
-          }
-        }
         case "--aggregate-user" => Right { a = a.copy(aggregateUser = true) }
         case "--long" | "-l" => Right { a = a.copy(long = true) }
         case "--write" => value(flag, inline).map(v => a = a.copy(write = Some(v)))
         case "--limit" => value(flag, inline).flatMap(v =>
           v.toIntOption.toRight(s"--limit: not a number: '$v'")
             .map(n => a = a.copy(limit = Some(n))))
-        case "--quiet" | "-q" | "--verbose" | "-v" => Right(())
-        // sacct_filter passthrough (slurm2sql.py:738 parse_known_args +
-        // args_to_sacct_filter :1040-1048): extra sacct selectors are
-        // applied as row filters — `--jobs=ID`, `--state=CD`,
-        // `--account=x`, bare `key=value`, `-j/-S/-E` shorts
-        case "--jobs" | "-j" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("jobs", v)))
-        case "--starttime" | "-S" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("starttime", v)))
-        case "--endtime" | "-E" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("endtime", v)))
-        case f if f.startsWith("--") &&
-            SacctFilter.KEYS.contains(f.drop(2).toLowerCase) =>
-          value(flag, inline).map(v => a = a.copy(sacctFilter =
-            a.sacctFilter :+ (f.drop(2).toLowerCase, v)))
         case p if !p.startsWith("-") && JOBID_RE.pattern.matcher(p).matches() &&
             a.jobId.isEmpty =>
           Right { a = a.copy(jobId = Some(p)) }
-        case p if !p.startsWith("-") && SacctFilter.parseToken(p).isDefined =>
-          Right { a = a.copy(sacctFilter = a.sacctFilter :+
-            SacctFilter.parseToken(p).get) }
-        case other => Left(s"unknown argument '$other' (graft reads stored " +
+        case other => sel.accept(other, value(flag, inline)).getOrElse(Left(
+          s"unknown argument '$other' (graft reads stored " +
           "data — supported sacct passthrough selectors: " +
           SacctFilter.KEYS.toSeq.sorted.map(k => s"--$k=").mkString(", ") +
-          "; use --db/--csv-input/--sacct-input plus the documented selectors)")
+          "; use --db/--csv-input/--sacct-input plus the documented selectors)"))
       }
       res match { case Left(e) => return Left(e); case Right(_) => () }
     }
     if (a.db.isEmpty && a.csvInput.isEmpty && a.sacctInput.isEmpty)
       Left("one of --db, --csv-input, --sacct-input is required " +
         "(graft cannot spawn sacct in this environment)")
-    else Right(a)
+    else Right(a.copy(states = sel.states, runningAtTime = sel.runningAtTime,
+      sacctFilter = sel.sacctFilter))
+  }
+
+  /** The selectors `graft-sacct`/`graft-seff` and `graft-ingest` share,
+    * collected across one parse: the mutually exclusive state
+    * categories (slurm2sql.py:726-732,1156-1159), and the sacct_filter
+    * passthrough (slurm2sql.py:738 parse_known_args +
+    * args_to_sacct_filter :1040-1048) — extra sacct selectors applied
+    * as row filters: `--jobs=ID`, `--state=CD`, `--account=x`, bare
+    * `key=value`, `-j/-S/-E` shorts. */
+  private[tools] final class Selectors {
+    var states: Option[Seq[String]] = None
+    var runningAtTime: Option[Long] = None
+    var sacctFilter: Seq[(String, String)] = Nil
+    private var stateFlag: Option[String] = None
+
+    private def setStates(flag: String, codes: Seq[String]): Either[String, Unit] =
+      stateFlag match {
+        case Some(prev) => Left(s"$flag: not allowed with $prev " +
+          "(state selectors are mutually exclusive)")
+        case None => stateFlag = Some(flag); states = Some(codes); Right(())
+      }
+
+    private def filter(key: String, v: Either[String, String]): Either[String, Unit] =
+      v.map(x => sacctFilter = sacctFilter :+ (key, x))
+
+    /** Applies `flag` (its value read through `value` only when the
+      * flag takes one); None when the flag is not a selector. */
+    def accept(flag: String, value: => Either[String, String]): Option[Either[String, Unit]] =
+      Some(flag match {
+        case "--ended" | "-e" => setStates(flag, SlurmStates.ENDED)
+        case "--completed" => setStates(flag, SlurmStates.COMPLETED)
+        case "--cancelled" => setStates(flag, SlurmStates.CANCELLED)
+        case "--failed" => setStates(flag, SlurmStates.FAILED)
+        case "--running-at-time" => value.flatMap { v =>
+          stateFlag match {
+            case Some(prev) => Left(s"--running-at-time: not allowed with $prev")
+            case None =>
+              stateFlag = Some(flag)
+              parseTime(v).map(t => runningAtTime = Some(t))
+          }
+        }
+        case "--quiet" | "-q" | "--verbose" | "-v" => Right(())
+        case "-j" => filter("jobs", value)
+        case "-S" => filter("starttime", value)
+        case "-E" => filter("endtime", value)
+        case f if f.startsWith("--") &&
+            SacctFilter.KEYS.contains(f.drop(2).toLowerCase) =>
+          filter(f.drop(2).toLowerCase, value)
+        case p if !p.startsWith("-") && SacctFilter.parseToken(p).isDefined =>
+          Right { sacctFilter = sacctFilter :+ SacctFilter.parseToken(p).get }
+        case _ => return None
+      })
   }
 
   /** `--running-at-time` accepts epoch seconds or an ISO local
@@ -197,10 +215,25 @@ object Cli {
     * cluster-ready); csv/sacct paths ingest + derive on the fly. */
   def loadSlurm(spark: SparkSession, a: Args): DataFrame =
     a.db.map(SlurmWarehouse.read(spark, _))
-      .orElse(a.csvInput.map(SacctSource.loadSlurmTable(spark, _)))
-      .orElse(a.sacctInput.map(p =>
-        SlurmTable.build(SacctSource.readSacct(spark, p))))
+      .orElse(dumpTable(spark, a.csvInput, a.sacctInput, lit(0L)))
       .getOrElse(sys.error("no input (parse() guarantees one)"))
+
+  /** A `--csv-input` or `--sacct-input` dump as the typed slurm table;
+    * `now` is the Time a still-running job gets. */
+  private[tools] def dumpTable(spark: SparkSession, csvInput: Option[String],
+                               sacctInput: Option[String],
+                               now: Column): Option[DataFrame] =
+    csvInput.map(SacctSource.loadSlurmTable(spark, _, now = now))
+      .orElse(sacctInput.map(p =>
+        SlurmTable.build(SacctSource.readSacct(spark, p), now)))
+
+  /** The report input narrowed by the positional JobID, then by the
+    * sacct_filter tokens — the prelude both reports share. */
+  private def selectedSlurm(spark: SparkSession, a: Args): Either[String, DataFrame] = {
+    val slurm = loadSlurm(spark, a)
+    SacctFilter(a.jobId.fold(slurm)(id => slurm.filter(col("JobIDonly") ===
+      graft.functions.SlurmFunctions.jobIdOnly(lit(id)))), a.sacctFilter)
+  }
 
   private def resolve(df: DataFrame, name: String): Either[String, String] =
     df.columns.find(_.equalsIgnoreCase(name.trim))
@@ -227,13 +260,7 @@ object Cli {
   /** The sacct report frame (sacct_cli, slurm2sql.py:1160-1226):
     * filters via [[Reports.sacct]], then the field projection. */
   def sacctFrame(spark: SparkSession, a: Args): Either[String, DataFrame] = {
-    val slurm0 = loadSlurm(spark, a)
-    val slurm1 = a.jobId match {
-      case Some(id) => slurm0.filter(col("JobIDonly") ===
-        graft.functions.SlurmFunctions.jobIdOnly(lit(id)))
-      case None => slurm0
-    }
-    val slurm = SacctFilter(slurm1, a.sacctFilter) match {
+    val slurm = selectedSlurm(spark, a) match {
       case Left(e) => return Left(e)
       case Right(df) => df
     }
@@ -270,13 +297,7 @@ object Cli {
     * view, End-IS-NOT-NULL rule inside Reports.seff*, user/partition
     * applied on eff (the reference's WHERE rides the eff select). */
   def seffFrame(spark: SparkSession, a: Args): Either[String, DataFrame] = {
-    val slurm0 = loadSlurm(spark, a)
-    val slurm1 = a.jobId match {
-      case Some(id) => slurm0.filter(col("JobIDonly") ===
-        graft.functions.SlurmFunctions.jobIdOnly(lit(id)))
-      case None => slurm0
-    }
-    val slurm = SacctFilter(slurm1, a.sacctFilter) match {
+    val slurm = selectedSlurm(spark, a) match {
       case Left(e) => return Left(e)
       case Right(df) => df
     }
@@ -413,8 +434,10 @@ object SeffCli {
   *                          itself — the reference's primary mode
   *                          (slurm2sql.py:854-866): one subprocess
   *                          per ingest, or one per day batch under a
-  *                          history flag, each fed through the same
-  *                          reassembled-parse path a dump takes
+  *                          history flag, each parsed with the
+  *                          reference's line-continuation rule
+  *                          (SacctSource.readReassembled; a
+  *                          --sacct-input dump is read without it)
   *   --sacct-bin B          executable for live mode (default
   *                          `sacct`; the test seam — the reference's
   *                          tests stub the subprocess the same way)
@@ -433,7 +456,8 @@ object SeffCli {
   *                          no bookmark exists
   *   --jobs-only            allocations only, no steps (`sacct -X`)
   *   --now TS               pin "now" (epoch/ISO) for deterministic
-  *                          tests; defaults to wall clock
+  *                          tests; defaults to wall clock. A job that
+  *                          has started but not ended gets Time = now
   *   --ended/-e --completed --cancelled --failed --running-at-time T
   *                          ingest-time state-category selectors
   *                          (slurm2sql.py:726-732; mutually
@@ -485,14 +509,7 @@ object IngestCli {
   def parse(args: Seq[String]): Either[String, IngestArgs] = {
     var a = IngestArgs()
     var rest = args.toList
-    var stateFlag: Option[String] = None
-    def setStates(flag: String, codes: Seq[String]): Either[String, Unit] =
-      stateFlag match {
-        case Some(prev) => Left(s"$flag: not allowed with $prev " +
-          "(state selectors are mutually exclusive)")
-        case None => stateFlag = Some(flag)
-          a = a.copy(states = Some(codes)); Right(())
-      }
+    val sel = new Cli.Selectors
     def value(flag: String, inline: Option[String]): Either[String, String] =
       inline.orElse {
         rest match { case v :: t if !v.startsWith("--") => rest = t; Some(v)
@@ -524,48 +541,23 @@ object IngestCli {
         case "--now" => value(flag, inline).flatMap(v =>
           Cli.parseTime(v).left.map(_ => s"--now: cannot parse '$v'")
             .map(t => a = a.copy(now = Some(t))))
-        case "--quiet" | "-q" | "--verbose" | "-v" => Right(())
-        // ingest-time state selectors (slurm2sql.py:726-732)
-        case "--ended" | "-e" => setStates(flag, SlurmStates.ENDED)
-        case "--completed" => setStates(flag, SlurmStates.COMPLETED)
-        case "--cancelled" => setStates(flag, SlurmStates.CANCELLED)
-        case "--failed" => setStates(flag, SlurmStates.FAILED)
-        case "--running-at-time" => value(flag, inline).flatMap { v =>
-          stateFlag match {
-            case Some(prev) => Left(s"--running-at-time: not allowed with $prev")
-            case None =>
-              stateFlag = Some(flag)
-              Cli.parseTime(v).map(t => a = a.copy(runningAtTime = Some(t)))
-          }
-        }
-        // sacct_filter passthrough (parse_known_args, slurm2sql.py:738)
-        case "--jobs" | "-j" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("jobs", v)))
-        case "-S" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("starttime", v)))
-        case "-E" => value(flag, inline).map(v =>
-          a = a.copy(sacctFilter = a.sacctFilter :+ ("endtime", v)))
-        case f if f.startsWith("--") &&
-            SacctFilter.KEYS.contains(f.drop(2).toLowerCase) =>
-          value(flag, inline).map(v => a = a.copy(sacctFilter =
-            a.sacctFilter :+ (f.drop(2).toLowerCase, v)))
         case f if !f.startsWith("-") && a.warehouse.isEmpty =>
           Right { a = a.copy(warehouse = f) }
-        // post-warehouse positionals: a bare JobID is the `--jobs=ID`
-        // shorthand (args_to_sacct_filter :1046); `key=value` is a
-        // filter token
+        // a post-warehouse bare JobID is the `--jobs=ID` shorthand
+        // (args_to_sacct_filter :1046); the state selectors, sacct_filter
+        // flags and `key=value` tokens go to Cli.Selectors
         case p if !p.startsWith("-") &&
             Cli.JOBID_RE.pattern.matcher(p).matches() =>
-          Right { a = a.copy(sacctFilter = a.sacctFilter :+ ("jobs", p)) }
-        case p if !p.startsWith("-") && SacctFilter.parseToken(p).isDefined =>
-          Right { a = a.copy(sacctFilter = a.sacctFilter :+
-            SacctFilter.parseToken(p).get) }
-        case f => Left(s"unrecognized flag $f (supported sacct " +
+          Right { sel.sacctFilter = sel.sacctFilter :+ ("jobs", p) }
+        case f => sel.accept(f, value(flag, inline)).getOrElse(Left(
+          s"unrecognized flag $f (supported sacct " +
           "passthrough selectors: " +
-          SacctFilter.KEYS.toSeq.sorted.map(k => s"--$k=").mkString(", ") + ")")
+          SacctFilter.KEYS.toSeq.sorted.map(k => s"--$k=").mkString(", ") + ")"))
       }
       res match { case Left(e) => return Left(e); case _ => }
     }
+    a = a.copy(states = sel.states, runningAtTime = sel.runningAtTime,
+      sacctFilter = sel.sacctFilter)
     if (a.warehouse.isEmpty) Left("warehouse directory argument is required")
     else if (a.historyEnd.isDefined && a.history.isEmpty && !a.historyResume &&
       a.historyResumeOrStart.isEmpty && a.historyDays.isEmpty &&
@@ -639,7 +631,7 @@ object IngestCli {
     }
     def fetchLive(extra: Seq[String]): Either[String, DataFrame] =
       SacctSource.liveSlurmTable(spark, liveFilterArgs ++ extra, a.sacctBin,
-        spill).flatMap(postFilter)
+        spill, lit(now)).flatMap(postFilter)
     // dump mode reads the input ONCE; live mode fetches at use —
     // once for a plain ingest, once per day batch in the history loop
     // (the reference's whole reason for day batching is "avoid
@@ -647,11 +639,7 @@ object IngestCli {
     // anything if each batch is its own sacct call)
     def rawOnce: Either[String, DataFrame] =
       if (live) fetchLive(Nil)
-      else postFilter(
-        a.csvInput.map(SacctSource.loadSlurmTable(spark, _))
-          .orElse(a.sacctInput.map(p =>
-            SlurmTable.build(SacctSource.readSacct(spark, p))))
-          .get)
+      else postFilter(Cli.dumpTable(spark, a.csvInput, a.sacctInput, lit(now)).get)
     val historyMode = a.history.isDefined || a.historyResume ||
       a.historyResumeOrStart.isDefined || a.historyDays.isDefined ||
       a.historyStart.isDefined

@@ -1000,90 +1000,6 @@ object ScaleRehearsal {
       ratio("d155 rrf+ivf probe", fused(base, embBase), fused(big, embBig))
     }
 
-    // r17 A/B family: this round's (and r16's sf0.1-invisible) shape
-    // swaps measured RETIRED vs SHIPPED on the same replicated corpus,
-    // min-of-2 per leg — run at factor 100 for the recorded numbers
-    // (SURVEY §8.21). Each stage times both shapes so the swap's
-    // ×-factor is measured, not reasoned.
-    st("r17ab") { // d24: fused per-row bands vs retired explode-aggregate
-      // signatures — production bucket cap on BOTH legs (the cap is
-      // downstream of the swap being measured; uncapped all-pairs on a
-      // 100x-replicated corpus measures pair explosion, not signatures)
-      ratio("d24 fused bands",
-        Dedup.polyMinhashPairs(base, col("text"), col("doc_id"),
-          maxBucket = Dedup.MAX_FULL_BUCKET).count(),
-        Dedup.polyMinhashPairs(big, col("text"), col("doc_id"),
-          maxBucket = Dedup.MAX_FULL_BUCKET).count())
-      ratio("d24 retired explode-agg",
-        Dedup.polyMinhashPairsAggPath(base, col("text"), col("doc_id"),
-          maxBucket = Dedup.MAX_FULL_BUCKET).count(),
-        Dedup.polyMinhashPairsAggPath(big, col("text"), col("doc_id"),
-          maxBucket = Dedup.MAX_FULL_BUCKET).count())
-    }
-    st("r17ab") { // d90/d155 lex arm: per-run corpus re-tokenization vs
-      // the materialized postings probe (the r16 arm swap; same method
-      // as the d60/d66 §8.20 pair, measured here on the same corpus
-      // replica so the two legs are directly comparable)
-      def indexed(df: org.apache.spark.sql.DataFrame, tag: String): String = {
-        val p = java.nio.file.Files.createTempDirectory(s"reh_lex_$tag").toString
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))))
-        Retrieval.postings(df, col("text"), col("doc_id"))
-          .write.mode("overwrite").parquet(p)
-        p
-      }
-      lazy val idx1 = indexed(base, "1x")
-      lazy val idxN = indexed(big, "Nx")
-      ratio("d90/d155 lex arm re-tokenize (retired)",
-        Retrieval.bm25TopK(base, col("text"), col("doc_id"), bmQ,
-          col("text"), col("doc_id"), 10).count(),
-        Retrieval.bm25TopK(big, col("text"), col("doc_id"), bmQ,
-          col("text"), col("doc_id"), 10).count())
-      ratio("d90/d155 lex arm postings probe",
-        Retrieval.bm25FromIndex(spark.read.parquet(idx1), bmQ,
-          col("text"), col("doc_id"), 10).count(),
-        Retrieval.bm25FromIndex(spark.read.parquet(idxN), bmQ,
-          col("text"), col("doc_id"), 10).count())
-    }
-    st("r17ab") { // d79 capstone attach: retired decide-then-semi-join
-      // (two corpus derivations + id-keyed join exchanges) vs the
-      // shipped one-pass keeper carry (exactKeeperRows + carry params)
-      val factors = Map("en" -> 2500000L, "de" -> 800000L,
-        "fr" -> 800000L, "es" -> 800000L, "zh" -> 500000L)
-      val url = concat(lit("https://site"), pmod(col("doc_id"), lit(97L)),
-        lit(".org/p/"), col("doc_id"))
-      val blocked = Seq("site13.org", "site29.org")
-      def twoPass(d: org.apache.spark.sql.DataFrame): Long = {
-        val gated = Web.curateUrls(d, url, col("doc_id"), blocked)
-          .filter(col("kept")).select("doc_id")
-        val surv = d.join(gated, Seq("doc_id"), "left_semi")
-        val keepers = Dedup.exact(surv, col("text"), col("doc_id"))
-          .select(col("keeper_id").as("doc_id"))
-        val uniq = surv.join(keepers, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("lang"),
-            size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
-        val rep = Sampling.epochRepeat(uniq, col("lang"), col("doc_id"), factors)
-        val expanded = rep.join(uniq.select("doc_id", "n_tokens"), "doc_id")
-        TextOps.assignShards(expanded, col("doc_id") * 8L + col("epoch"),
-          col("n_tokens"), 4096L).count()
-      }
-      def onePass(d: org.apache.spark.sql.DataFrame): Long = {
-        val gatedRows = Web.curateUrls(d, url, col("doc_id"), blocked,
-            carry = Seq(col("lang"), col("text")))
-          .filter(col("kept"))
-          .withColumn("n_tokens", size(TextOps.tokens(col("text"))).cast("long"))
-        val uniq = Dedup.exactKeeperRows(gatedRows, col("text"),
-            col("doc_id"), keep = Seq("lang", "n_tokens"))
-          .withColumnRenamed("keeper_id", "doc_id")
-        val expanded = Sampling.epochRepeat(uniq, col("lang"), col("doc_id"),
-          factors, carry = Seq("n_tokens"))
-        TextOps.assignShards(expanded, col("doc_id") * 8L + col("epoch"),
-          col("n_tokens"), 4096L).count()
-      }
-      ratio("d79 retired two-pass attach", twoPass(base), twoPass(big))
-      ratio("d79 one-pass keeper carry", onePass(base), onePass(big))
-    }
-
     // family selection: no arg → all families IN-PROCESS (the legacy
     // single-JVM sweep; use run_rehearsal.sh for isolated recording),
     // "--list" prints the registry, otherwise a comma list of names

@@ -23,9 +23,11 @@ class IngestCliSpec extends AnyFunSuite {
       .coalesce(1).write.option("header", "true").mode("overwrite").csv(d)
     d
   }
-  lazy val direct = SlurmTable.build(SlurmSim.raw(spark, sfDir))
-  lazy val nowPin: Long = direct
+  lazy val nowPin: Long = SlurmTable.build(SlurmSim.raw(spark, sfDir))
     .agg(max(coalesce(col("Time"), col("Submit")))).head.getLong(0) + 10L
+  /** The table an ingest at `--now nowPin` derives: a job that has
+    * started but not ended gets Time = now. */
+  lazy val direct = SlurmTable.build(SlurmSim.raw(spark, sfDir), lit(nowPin))
 
   private def freshDir(): String =
     SparkTestSession.tmpDir("graft_ingest_wh").toString + "/wh"
@@ -113,6 +115,34 @@ class IngestCliSpec extends AnyFunSuite {
     assert(got.count() == direct.count() && got.count() > 0)
     assert(SlurmWarehouse.lastTimestamp(spark, wh).contains(
       direct.agg(max(coalesce(col("Time"), col("Submit")))).head.getLong(0)))
+  }
+
+  test("--now is a running job's Time through plain, --history-days and --update ingests") {
+    val now = 1709380800L // 2024-03-02T12:00:00Z
+    def csv(row: String): String = {
+      val d = SparkTestSession.tmpDir("graft_ingest_now")
+      Files.write(d.resolve("jobs.csv"),
+        s"JobID,User,State,Submit,Start,End\n$row\n".getBytes("UTF-8"))
+      d.toString
+    }
+    def rows(wh: String): Seq[(String, String, Long, String)] =
+      SlurmWarehouse.read(spark, wh).select("JobID", "State", "Time", "time_day")
+        .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2),
+          r.get(3).toString)).toSeq
+    val running = csv("777,alice,RUNNING,2024-03-01T10:00:00,2024-03-01T10:05:00,Unknown")
+    val (wh, _) = run("--csv-input", running, "--now", now.toString)
+    assert(rows(wh) == Seq(("777", "RUNNING", now, "2024-03-02")))
+    // a history window covering `now` keeps it (Time = 0 fell outside)
+    val (whH, _) = run("--csv-input", running, "--history-days", "1",
+      "--now", now.toString)
+    assert(rows(whH) == Seq(("777", "RUNNING", now, "2024-03-02")))
+    // its COMPLETED version replaces it: no stale row left behind
+    val done = csv("777,alice,COMPLETED,2024-03-01T10:00:00,2024-03-01T10:05:00," +
+      "2024-03-02T13:00:00")
+    val a = IngestCli.parse(Seq(wh, "--csv-input", done, "--update",
+      "--now", (now + 7200L).toString)).toOption.get
+    assert(IngestCli.ingest(spark, a).toOption.get == 0)
+    assert(rows(wh) == Seq(("777", "COMPLETED", now + 3600L, "2024-03-02")))
   }
 
   test("re-ingest without --update recreates; --update merges without duplicates") {

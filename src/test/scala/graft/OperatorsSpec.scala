@@ -941,6 +941,29 @@ class OperatorsSpec extends AnyFunSuite {
     assert(gotC.except(refC).count() == 0 && refC.except(gotC).count() == 0)
   }
 
+  test("exactKeeperRows rejects a keep column named like its keeper_id or _kid") {
+    Seq("keeper_id", "_kid").foreach { k =>
+      val d = Seq((1L, "a", 7L)).toDF("doc_id", "text", k)
+      val e = intercept[IllegalArgumentException](
+        Dedup.exactKeeperRows(d, col("text"), col("doc_id"), keep = Seq(k)))
+      assert(e.getMessage.contains(k))
+    }
+  }
+
+  test("epochRepeat rejects a carry column named like its own output") {
+    val d = Seq((1L, "a", 3L)).toDF("doc_id", "dom", "epoch")
+    val e = intercept[IllegalArgumentException](Sampling.epochRepeat(d,
+      col("dom"), col("doc_id"), Map("a" -> 1000000L), carry = Seq("epoch")))
+    assert(e.getMessage.contains("epoch"))
+  }
+
+  test("curateUrls rejects a carry column named like its verdict columns") {
+    val d = Seq((1L, "https://a.org/x", "news")).toDF("doc_id", "url", "domain")
+    val e = intercept[IllegalArgumentException](Web.curateUrls(d, col("url"),
+      col("doc_id"), Seq("b.org"), carry = Seq(col("domain"))))
+    assert(e.getMessage.contains("domain"))
+  }
+
   test("fuzzy decontamination flags docs whose perturbed copies sit in the bench set") {
     val toks = split(col("text"), "\\s+")
     val benchSrc = docs.filter(col("doc_id") % 7 === 0)

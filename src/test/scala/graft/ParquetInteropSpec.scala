@@ -7,8 +7,7 @@ import graft.operators.ParquetFile
   * (parquet-mr): real Spark files — REQUIRED and OPTIONAL columns,
   * dictionary encoding, real page splits, all four codecs — walk
   * through our from-scratch reader with the stats audit passing; our
-  * writer's files read back row-identical through spark.read.parquet.
-  * (ParquetSmoke is the wider dev sweep; this is the committed pin.) */
+  * writer's files read back row-identical through spark.read.parquet. */
 class ParquetInteropSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.get

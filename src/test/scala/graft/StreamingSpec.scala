@@ -180,6 +180,73 @@ class StreamingSpec extends AnyFunSuite {
     assert(tenOclock(0).getAs[Double]("total_value") == 1.0)
   }
 
+  /** Stages `df` split by its `wave` column the way the d165–d177
+    * gates do (one file per wave, read one per micro-batch); returns
+    * the dir. */
+  private def staged(prefix: String, df: org.apache.spark.sql.DataFrame): String = {
+    val base = SparkTestSession.tmpDir(prefix)
+    graft.queries.PipelineQueries.stageWaves(df, base, 3)
+    base.toString
+  }
+
+  private def runToEnd(out: org.apache.spark.sql.DataFrame, sink: String): Unit =
+    out.writeStream.outputMode("append").format("memory").queryName(sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+
+  test("staged waves: the late filter in batch b uses batch b-2's watermark") {
+    import spark.implicits._
+    // wave w holds one event per hour 1..10(w+1) under its own type, so
+    // the wave maxima strictly increase and which wave-2 windows
+    // survive names the batch whose stats filter it
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:01Z").getEpochSecond
+    val dir = staged("waves_win", (0 until 3).flatMap(w =>
+      (1 to 10 * (w + 1)).map(h =>
+        (w, new java.sql.Timestamp((t0 + h * 3600L) * 1000L), s"t$w", 1.0)))
+      .toDF("wave", "ts", "event_type", "value"))
+    runToEnd(EventStream.windowedCounts(spark.readStream
+      .schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
+      .option("maxFilesPerTrigger", "1").parquet(dir)), "waves_win_out")
+    val got = spark.table("waves_win_out").groupBy("event_type")
+      .agg(count(lit(1)), min(date_format(col("window_start"), "MM-dd HH:mm")),
+        max(date_format(col("window_start"), "MM-dd HH:mm")))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2), r.getString(3)))
+      .toMap
+    // waves 0 and 1 drop nothing; wave 2 drops the windows that end by
+    // max(wave 0) − 30 min = 09:30:01 (batch 1's stats would cut at
+    // 19:30:01); append mode emits up to max(all) − 30 min = 01-02 05:30:01
+    assert(got == Map(
+      "t0" -> (10L, "01-01 01:00", "01-01 10:00"),
+      "t1" -> (20L, "01-01 01:00", "01-01 20:00"),
+      "t2" -> (20L, "01-01 09:00", "01-02 04:00")))
+  }
+
+  test("staged waves: dedup expiry follows the b-2 watermark; a suppressed duplicate does not refresh it") {
+    import spark.implicits._
+    def at(h: Double) = new java.sql.Timestamp(
+      java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli + (h * 3600000L).toLong)
+    // default 1 h horizon; M carries each wave's watermark
+    val dir = staged("waves_dedup", Seq(
+      (0, 1L, at(1.0), "A"), (0, 6L, at(1.0), "D"), (0, 9L, at(10.0), "M"),
+      (1, 2L, at(1.0 + 10.0 / 60), "A"), (1, 3L, at(2.0), "B"),
+      (1, 7L, at(8.5), "D"), (1, 9L, at(10.0 + 20.0 / 60), "M2"),
+      (2, 4L, at(9.0 + 40.0 / 60), "A"), (2, 5L, at(2.0 + 5.0 / 60), "B"),
+      (2, 8L, at(9.0 + 5.0 / 60), "D"), (2, 10L, at(9.0 + 10.0 / 60), "C"),
+      (2, 11L, at(10.0 + 40.0 / 60), "M3")).toDF("wave", "doc_id", "ts", "text"))
+    runToEnd(EventStream.deduplicated(spark.readStream
+      .schema("doc_id LONG, ts TIMESTAMP, text STRING")
+      .option("maxFilesPerTrigger", "1").parquet(dir), col("text")), "waves_dedup_out")
+    val got = spark.table("waves_dedup_out").select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    // batch 1 has no watermark yet: A@01:10 and D@08:30 are suppressed
+    // by state. Batch 2 filters and evicts at max(wave 0) − 1 h = 09:00
+    // (batch 1's stats would give 09:20 and drop C@09:10 and D@09:05):
+    // B@02:05 is late; A's and D's keys (expiry 02:00) are gone, so
+    // A@09:40 and D@09:05 re-emit — had D's suppressed 08:30 copy
+    // refreshed its expiry to 09:30, D@09:05 would stay suppressed
+    assert(got == Set(1L, 6L, 9L, 3L, 4L, 8L, 10L, 11L))
+  }
+
   test("sessionize state machine closes gap>30min sessions") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -209,7 +276,7 @@ class StreamingSpec extends AnyFunSuite {
     // emitted (no later event to close the session) and state never
     // shrank. With EventTimeTimeout the timeout fires in the first
     // batch where the group has no data and the CURRENT watermark
-    // (b-1 stats — StreamProbe3) exceeds lastTs + gap.
+    // (b-1 stats) exceeds lastTs + gap.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -235,7 +302,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sessionize merges a late out-of-order slice backward (no spurious split)") {
-    // StreamProbe3's u6: a wave-1 event 10 min BEFORE its wave-0
+    // d169's u6 case: a wave-1 event 10 min BEFORE its wave-0
     // predecessor is within the gap (negative diff), so it MERGES and
     // the state machine's lastTs moves backward — n=2, one session.
     import spark.implicits._
@@ -248,7 +315,7 @@ class StreamingSpec extends AnyFunSuite {
     // anchor LOW (05:10 → watermark 04:40) so the out-of-order 04:50
     // stays above the late filter even though MemoryStream runs
     // no-data batches between addData calls (unlike the staged-file
-    // gate, where the filter lags one batch — StreamProbe3)
+    // gate, where the filter lags to b-2 — the staged-wave case above)
     stream.addData(Seq((6L, ts("2024-01-01 05:00:00"), 6.0),
       (9L, ts("2024-01-01 05:10:00"), 1.0)))
     q.processAllAvailable()
