@@ -9,8 +9,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Without Hadoop's native library, RawLocalFileSystem forks one
   * `chmod` per created file, checksum sidecar and directory, so a
   * day-partitioned warehouse write (~1,000 day directories at
-  * sf0.001) forks thousands of processes from the test JVM. The bits
-  * set are the same; the test session installs this as `file://`. */
+  * sf0.001) forks thousands of processes from the JVM. The bits set
+  * are the same; [[Tables.session]] installs this as `file://`. */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 class NioRawLocalFileSystem extends RawLocalFileSystem {

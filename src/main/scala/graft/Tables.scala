@@ -35,11 +35,26 @@ object Tables {
     } else df
   }
 
-  /** Common session defaults used by Verify/Bench/tests.
+  /** Common session defaults used by Verify/Bench/the CLIs/tests — the
+    * only session builder the product has, so the suite and the CLIs
+    * run one configuration.
     *
     * ANSI off: the reference engine (slurm2sql) treats malformed values
     * as NULL (e.g. slurm2sql.py:53-65); permissive mode mirrors that and
     * matches SQLite/DuckDB behavior for the oracle compare.
+    *
+    * Three settings keep per-call overhead off the report and ingest
+    * paths without changing any result:
+    *  - `file://` goes through [[NioLocalFileSystem]]: no forked
+    *    `chmod` per written file, checksum sidecar and directory;
+    *  - partition directories are always listed on the driver. The
+    *    master is `local[cpus]`, so Spark's parallel listing job (one
+    *    task per directory once a table has more than 32) only spreads
+    *    the listing over the same cores and adds its scheduling cost;
+    *  - the generated-class cache holds 1,000 entries instead of 100: a
+    *    corpus curation pass alone generates ~113 distinct classes, so
+    *    the default least-recently-used cache recompiled ~89 of them
+    *    (and re-warmed them in the JIT) on every warm pass.
     */
   def session(appName: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -58,6 +73,9 @@ object Tables {
       // (which splits methods properly); hot analytical paths are
       // column-pruned far below 50 and stay fused.
       .config("spark.sql.codegen.maxFields", "50")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
       .config("spark.ui.enabled", "false")
       // keep the catalog warehouse out of the working directory: a
       // default session drops a `spark-warehouse/` dir wherever it

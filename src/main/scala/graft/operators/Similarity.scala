@@ -447,6 +447,11 @@ object Similarity {
                     centroids: Option[Array[Array[Double]]] = None): Unit = {
     val cents = centroids.getOrElse(kmeansCentroids(emb, nCells, kmeansIters))
     val spark = emb.sparkSession
+    // the old sidecar goes before anything is rewritten: a rebuild that
+    // fails past this point must not leave the previous fingerprint
+    // guarding (and rejecting probes of) the new centroids
+    val fp = java.nio.file.Paths.get(path, "centroids.fp")
+    java.nio.file.Files.deleteIfExists(fp)
     val centRows = cents.toSeq.zipWithIndex.map { case (c, i) =>
       Row(i, c.toSeq)
     }
@@ -464,11 +469,19 @@ object Similarity {
     // the cost of a tiny local file read, instead of either trusting
     // the caller blindly (silent wrong neighbors on a stale handoff)
     // or re-reading the centroid parquet per probe (the KB-read job
-    // r16 removed)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "centroids.fp"),
-      centroidFingerprint(cents).getBytes("UTF-8"))
-    catch { case _: Throwable => () } // non-local path: guard degrades to off
+    // r16 removed). Written to a temp file and renamed into place, so a
+    // reader sees the whole fingerprint or none; on failure (e.g. a
+    // non-local path) the guard is off for this index, and says so.
+    val tmp = java.nio.file.Paths.get(path, "centroids.fp.tmp")
+    try {
+      java.nio.file.Files.write(tmp, centroidFingerprint(cents).getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, fp,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } catch { case e: java.io.IOException =>
+      System.err.println(s"[ivf] WARN: no centroid fingerprint written at $fp " +
+        s"($e); probes with caller-supplied centroids go unchecked")
+    }
     // norms ride in the index: the probe path never recomputes them
     emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
       .withColumn("n", norm(col("v")))

@@ -1,7 +1,8 @@
 package graft.slurm
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 /** The reference's output artifact is a SQLite file with indexes on
   * (JobIDnostep, Start, User+Start, Time, User+Time)
@@ -30,7 +31,10 @@ object SlurmWarehouse {
     * tiny days share one task. The writer still splits each task's
     * rows into per-day files via partitionBy. */
   def write(slurm: DataFrame, path: String,
-            mode: SaveMode = SaveMode.Overwrite): Unit = {
+            mode: SaveMode = SaveMode.Overwrite): Unit =
+    layout(slurm).mode(mode).parquet(s"$path/slurm")
+
+  private def layout(slurm: DataFrame): DataFrameWriter[Row] =
     slurm
       .withColumn("time_day", date_format(
         timestamp_seconds(coalesce(col("Time"), col("Submit"))), "yyyy-MM-dd"))
@@ -38,9 +42,6 @@ object SlurmWarehouse {
       .sortWithinPartitions(col("time_day"), col("User"), col("Start"))
       .write
       .partitionBy("time_day")
-      .mode(mode)
-      .parquet(s"$path/slurm")
-  }
 
   /** Blind APPEND load: the cheap daily-ingest path for batches known
     * to be disjoint from stored data (a fresh day's jobs, a backfill
@@ -53,8 +54,34 @@ object SlurmWarehouse {
   def append(slurm: DataFrame, path: String): Unit =
     write(slurm, path, SaveMode.Append)
 
+  /** The stored table, read with [[schema]] instead of one inferred
+    * from the files: building the frame starts no Spark job (no
+    * parquet-footer job; the day directories are listed on the driver,
+    * see [[graft.Tables.session]]), which on an interactive report call
+    * used to cost more than the query itself. Rows and schema equal
+    * those of an inferred `spark.read.parquet`; a missing warehouse
+    * still fails with PATH_NOT_FOUND, and corrupt files fail when a
+    * query reads them. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/slurm")
+    spark.read.schema(schema(spark)).parquet(s"$path/slurm")
+
+  @volatile private var derived: StructType = _
+
+  /** The warehouse schema: [[SlurmTable.build]]'s output with every
+    * field nullable (as parquet reads it back), plus the `time_day`
+    * partition column as the date partition inference gives it.
+    * Derived once from the build itself, over an empty frame of the
+    * sacct string fields, so it cannot drift from what [[write]]
+    * stores. */
+  private def schema(spark: SparkSession): StructType = {
+    if (derived == null) {
+      val raw = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(SacctSource.SACCT_FIELDS.map(StructField(_, StringType))))
+      derived = StructType(SlurmTable.build(raw).schema.map(_.copy(nullable = true)) :+
+        StructField("time_day", DateType))
+    }
+    derived
+  }
 
   /** Bucketed variant: pre-shuffle by JobIDnostep into fixed buckets at
     * write time, so every job-key operation afterwards — the eff
@@ -136,9 +163,12 @@ object SlurmWarehouse {
     * empty batch. */
   def mergeInto(spark: SparkSession, fresh: DataFrame, path: String): Option[Long] = {
     val ts = coalesce(col("Time"), col("Submit"))
-    val existing =
-      try { val df = read(spark, path); df.schema; Some(df) }
-      catch { case _: Exception => None }
+    val slurmDir = new org.apache.hadoop.fs.Path(s"$path/slurm")
+    val fs = slurmDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // only a missing directory means "no warehouse yet": a warehouse
+    // that exists but cannot be read must fail the merge, never be
+    // overwritten whole
+    val existing = if (fs.exists(slurmDir)) Some(read(spark, path)) else None
 
     val bounds = fresh
       .agg(min(coalesce(col("Submit"), col("Time"))), max(ts),
@@ -153,15 +183,17 @@ object SlurmWarehouse {
         // large) Time to the min, which could let its OLD row in an
         // earlier day partition escape the prune and survive as a
         // duplicate JobID — fall back to an unpruned stale-day scan
-        val minDay =
-          if (bounds.getInt(2) > 0) "0000-00-00"
-          else java.time.Instant.ofEpochSecond(bounds.getLong(0))
-            .toString.substring(0, 10)             // yyyy-MM-dd, UTC like write()
+        // (no filter at all: a sentinel such as '0000-00-00' casts to a
+        // NULL date and would prune every day instead of none)
+        val candidates =
+          if (bounds.getInt(2) > 0) old
+          else old.filter(col("time_day") >= java.time.Instant.ofEpochSecond(
+            bounds.getLong(0)).toString.substring(0, 10)) // yyyy-MM-dd, UTC like write()
         // days to rewrite: those receiving fresh rows + those holding a
         // prior version of a fresh JobID (its Time may have moved days)
         val freshDayed = fresh.withColumn("time_day",
           date_format(timestamp_seconds(ts), "yyyy-MM-dd"))
-        val staleDays = old.filter(col("time_day") >= minDay)
+        val staleDays = candidates
           .join(fresh.select("JobID").distinct(), Seq("JobID"), "left_semi")
           .select("time_day")
         val outDays = staleDays.union(freshDayed.select("time_day"))
@@ -175,20 +207,13 @@ object SlurmWarehouse {
         val mergedDays = merged.select(
           date_format(timestamp_seconds(ts), "yyyy-MM-dd")).distinct()
           .collect().map(_.getString(0)).toSet
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try write(merged, path, SaveMode.Overwrite)
-        finally {
-          merged.unpersist()
-          prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
+        // dynamic overwrite as a write option: the caller's session
+        // conf is neither read nor changed
+        try layout(merged).mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic").parquet(s"$path/slurm")
+        finally merged.unpersist()
         (outDays.toSet -- mergedDays).foreach { d =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/slurm/time_day=$d"), true)
+          fs.delete(new org.apache.hadoop.fs.Path(slurmDir, s"time_day=$d"), true)
         }
     }
     Some(bounds.getLong(1))

@@ -793,6 +793,13 @@ object DeidentifyCli {
       return Left("unknown columns: " +
         a.columns.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
           .mkString(","))
+    // labels are strings: a relabelled numeric column would no longer
+    // match the schema SlurmWarehouse.read gives the stored table
+    val nonString = df.schema.fields.filter(f =>
+      present.exists(_.equalsIgnoreCase(f.name)) &&
+        f.dataType != org.apache.spark.sql.types.StringType).map(_.name)
+    if (nonString.nonEmpty)
+      return Left("cannot relabel non-string columns: " + nonString.mkString(","))
     // one pass for the reference's per-column mapping sizes
     val counts =
       if (present.isEmpty) Seq.empty

@@ -71,6 +71,9 @@ class IngestCliSpec extends AnyFunSuite {
       DeidentifyCli.parse(Seq(wh, "--columns", "NoSuchCol")).toOption.get).isLeft)
     assert(DeidentifyCli.run(spark,
       DeidentifyCli.parse(Seq(freshDir())).toOption.get).isLeft)
+    // labels are strings; a numeric column keeps its stored type
+    assert(DeidentifyCli.run(spark,
+      DeidentifyCli.parse(Seq(wh, "--columns", "NCPUS")).toOption.get).isLeft)
     val counts = DeidentifyCli.run(spark,
       DeidentifyCli.parse(Seq(wh)).toOption.get).toOption.get
     // mapped counts reported for the present identifier columns
@@ -158,6 +161,75 @@ class IngestCliSpec extends AnyFunSuite {
     val merged = SlurmWarehouse.read(spark, wh)
     assert(merged.count() == n)
     assert(merged.groupBy("JobID").count().filter(col("count") > 1).count() == 0)
+  }
+
+  /** A header-plus-rows CSV dump in its own directory. */
+  private def jobsCsv(rows: String*): String = {
+    val d = SparkTestSession.tmpDir("graft_ingest_jobs")
+    Files.write(d.resolve("jobs.csv"),
+      ("JobID,User,State,Submit,Start,End\n" + rows.mkString("\n") + "\n")
+        .getBytes("UTF-8"))
+    d.toString
+  }
+  /** Three completed jobs, one per day 2024-03-01..03. */
+  private lazy val threeDays: String = jobsCsv(
+    "101,alice,COMPLETED,2024-03-01T10:00:00,2024-03-01T10:05:00,2024-03-01T11:00:00",
+    "102,bob,COMPLETED,2024-03-02T10:00:00,2024-03-02T10:05:00,2024-03-02T11:00:00",
+    "103,carol,COMPLETED,2024-03-03T10:00:00,2024-03-03T10:05:00,2024-03-03T11:00:00")
+
+  /** Every file under the warehouse's `slurm` directory with its bytes. */
+  private def slurmFiles(wh: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(wh, "slurm")
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+  }
+
+  test("--update rewrites only the touched day under a static-overwrite session and leaves its conf alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val (wh, _) = run("--csv-input", threeDays)
+      val before = slurmFiles(wh)
+      // job 102 re-reported and a new job 104, both on 2024-03-02
+      val update = jobsCsv(
+        "102,bob,FAILED,2024-03-02T10:00:00,2024-03-02T10:05:00,2024-03-02T10:30:00",
+        "104,dave,COMPLETED,2024-03-02T12:00:00,2024-03-02T12:05:00,2024-03-02T13:00:00")
+      val a = IngestCli.parse(Seq(wh, "--csv-input", update, "--update")).toOption.get
+      assert(IngestCli.ingest(spark, a).toOption.get == 0)
+      val after = slurmFiles(wh)
+      def day(m: Map[String, Seq[Byte]], d: String) =
+        m.filter(_._1.startsWith(s"time_day=$d/"))
+      for (d <- Seq("2024-03-01", "2024-03-03"))
+        assert(day(after, d).nonEmpty && day(after, d) == day(before, d), d)
+      assert(day(after, "2024-03-02").keySet != day(before, "2024-03-02").keySet)
+      assert(SlurmWarehouse.read(spark, wh).select("JobID", "State").collect()
+        .map(r => (r.getString(0), r.getString(1))).sorted.toSeq ==
+        Seq(("101", "COMPLETED"), ("102", "FAILED"), ("103", "COMPLETED"),
+          ("104", "COMPLETED")))
+      assert(spark.conf.get(key) == "static")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("--update over an unreadable warehouse fails loudly and leaves its files in place") {
+    val (wh, _) = run("--csv-input", threeDays)
+    // every day file becomes garbage; its checksum sidecar goes, so a
+    // reader meets the garbage itself rather than a checksum mismatch
+    slurmFiles(wh).keys.map(java.nio.file.Paths.get(wh, "slurm", _)).foreach { f =>
+      val name = f.getFileName.toString
+      if (name.endsWith(".crc")) Files.delete(f)
+      else if (name.endsWith(".parquet")) Files.write(f, "not parquet".getBytes("UTF-8"))
+    }
+    val before = slurmFiles(wh)
+    assert(before.keys.count(_.endsWith(".parquet")) == 3)
+    // the merge must read the stored days to find re-reported jobs
+    val a = IngestCli.parse(Seq(wh, "--csv-input", threeDays, "--update")).toOption.get
+    intercept[Exception](IngestCli.ingest(spark, a))
+    assert(slurmFiles(wh) == before)
   }
 
   // the sim's Time axis rides TPC-H order dates (~7 years); history

@@ -109,4 +109,36 @@ class IvfDriftSpec extends AnyFunSuite {
       Similarity.ivfAppendVerdict(spark, old, reb, q, k = 3).count()
     }
   }
+
+  test("a rebuild whose fingerprint write fails leaves no stale sidecar and warns") {
+    val dir = SparkTestSession.tmpDir("ivffp_fail").toString
+    val fp = java.nio.file.Paths.get(dir, "centroids.fp")
+    val e = vecs(0L until 64L, blob)
+    val cents = Similarity.trainIvfCentroids(e, nCells = 4, kmeansIters = 3)
+    Similarity.writeIvfIndex(e, dir, nCells = 4, centroids = Some(cents))
+    assert(java.nio.file.Files.exists(fp))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "centroids.fp.tmp")),
+      "a written sidecar leaves no temp file behind")
+    val retrained = Similarity.trainIvfCentroids(
+      vecs(0L until 128L, blob), nCells = 4, kmeansIters = 5)
+    // a non-empty directory where the temp sidecar goes: the write fails
+    val blocker = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "centroids.fp.tmp", "x"))
+    val err = new java.io.ByteArrayOutputStream()
+    val sysErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Similarity.writeIvfIndex(e, dir, nCells = 4, centroids = Some(retrained))
+    finally System.setErr(sysErr)
+    assert(err.toString.contains("no centroid fingerprint written"), err.toString)
+    // the old fingerprint is gone: it would reject the index's own
+    // centroids and pass the stale ones
+    assert(!java.nio.file.Files.exists(fp))
+    assert(Similarity.ivfTopKFromIndex(spark, dir, vecs(0L until 4L, blob), k = 3,
+      centroids = Some(Similarity.readIvfCentroids(spark, dir))).count() > 0)
+    // the next successful rebuild writes it again
+    java.nio.file.Files.delete(blocker)
+    java.nio.file.Files.delete(blocker.getParent)
+    Similarity.writeIvfIndex(e, dir, nCells = 4, centroids = Some(retrained))
+    assert(java.nio.file.Files.exists(fp))
+  }
 }

@@ -4,17 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
 object SparkTestSession {
-  /** Two settings, read from system properties when the context is
-    * built, keep the suite's many ~1,000-day warehouse writes and reads
-    * cheap without changing what they produce: `file://` goes through
-    * [[NioLocalFileSystem]] (no forked `chmod` per file), and a
-    * directory's partition subdirectories are listed on the driver
-    * instead of by a 1,000-task listing job per read. */
-  lazy val get: SparkSession = {
-    System.setProperty("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
-    System.setProperty("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-    Tables.session("graft-test", "4")
-  }
+  /** Built by [[Tables.session]] exactly as the CLIs build theirs: the
+    * suite sets no property of its own, so what it measures and pins
+    * is the configuration users run (local FS without forked `chmod`,
+    * driver-side partition listing — see that method's scaladoc). */
+  lazy val get: SparkSession = Tables.session("graft-test", "4")
 
   /** All test scratch lives under target/test-tmp — ignored by git,
     * never in /tmp (a long host session used to accumulate graft_*

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.slurm.{SlurmSim, SlurmTable, SlurmViews, SlurmWarehouse}
@@ -28,6 +29,61 @@ class WarehouseSpec extends AnyFunSuite {
     val planStr = pruned.queryExecution.executedPlan.toString
     assert(pruned.count() > 0)
     assert(planStr.contains("PartitionFilters") || pruned.count() < back.count())
+  }
+
+  /** A 40-day warehouse: more day directories than the 32 at which
+    * Spark would list them with a parallel job. */
+  private lazy val manyDays: String = {
+    val dir = SparkTestSession.tmpDir("graft_wh_days").toString
+    def at(offsetS: Column) = date_format(timestamp_seconds(
+      lit(1709251200L) + col("id") * 8640L + offsetS), "yyyy-MM-dd'T'HH:mm:ss")
+    SlurmWarehouse.write(SlurmTable.build(spark.range(400).select(
+      col("id").cast("string").as("JobID"),
+      concat(lit("user_"), (col("id") % 20).cast("string")).as("User"),
+      lit("COMPLETED").as("State"), at(lit(0L)).as("Submit"),
+      at(lit(60L)).as("Start"), at(lit(3600L)).as("End"))), dir)
+    dir
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)   // no earlier job reaches `l`
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("a warehouse read and the report frames start no Spark job") {
+    import graft.tools.Cli
+    val dir = manyDays
+    assert(new java.io.File(s"$dir/slurm").listFiles()
+      .count(_.getName.startsWith("time_day=")) > 32)
+    assert(jobsStarted(SlurmWarehouse.read(spark, dir).schema) == 0)
+    def args(a: String*) = Cli.parse(Seq("--db", dir) ++ a).toOption.get
+    for (a <- Seq(args("123"), args("-r", "gpu", "-u", "user_7", "--order", "Start desc")))
+      assert(jobsStarted(Cli.sacctFrame(spark, a).toOption.get) == 0, a)
+    for (a <- Seq(args("-u", "user_7"), args("--aggregate-user")))
+      assert(jobsStarted(Cli.seffFrame(spark, a).toOption.get) == 0, a)
+  }
+
+  test("the schema'd read equals an inferred read; a missing warehouse still errors") {
+    val dir = manyDays
+    val back = SlurmWarehouse.read(spark, dir)
+    val inferred = spark.read.parquet(s"$dir/slurm")
+    assert(back.schema == inferred.schema)
+    assert(back.count() == inferred.count() && back.count() > 0)
+    assert(back.exceptAll(inferred).isEmpty && inferred.exceptAll(back).isEmpty)
+    val missing = SparkTestSession.tmpDir("graft_wh_none").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      SlurmWarehouse.read(spark, missing))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
   }
 
   test("resume bookkeeping: second load appends only newer rows") {
@@ -93,6 +149,21 @@ class WarehouseSpec extends AnyFunSuite {
     val back = SlurmWarehouse.read(spark, dir)
     assert(back.count() == first.count() + 1)
     assert(back.filter(col("JobID") === "999999_late").count() == 1)
+  }
+
+  test("mergeInto replaces a job re-reported with no Submit, whatever day its old row sits in") {
+    import spark.implicits._
+    val dir = SparkTestSession.tmpDir("graft_wh_nosubmit").toString
+    def job(state: String, submit: String, end: String) =
+      SlurmTable.build(Seq(("201", "alice", state, submit, "2024-03-01T10:05:00", end))
+        .toDF("JobID", "User", "State", "Submit", "Start", "End"),
+        lit(1709294400L))                         // now = 2024-03-01T12:00:00Z
+    SlurmWarehouse.write(job("RUNNING", "2024-03-01T10:00:00", ""), dir)
+    // no Submit: the stale-day prune cannot bound the old row's day
+    SlurmWarehouse.mergeInto(spark, job("COMPLETED", "", "2024-03-05T11:00:00"), dir)
+    assert(SlurmWarehouse.read(spark, dir).select("JobID", "State", "time_day")
+      .collect().map(r => (r.getString(0), r.getString(1), r.get(2).toString)).toSeq ==
+      Seq(("201", "COMPLETED", "2024-03-05")))
   }
 
   test("compact: accreted day files bin-pack, results and bookmark unchanged") {
